@@ -34,4 +34,12 @@ object Sessions {
       // 1.0-1.2 vs 1.4-1.6): the extra tiny post-shuffle tasks are pure
       // overhead once scans parallelize. Dropped — fewer tuned constants.
       .config("spark.ui.enabled", "false")
+      // JVM-wide cache of generated classes (a static conf: it only takes
+      // at session build). One import task compiles 100-143 distinct
+      // classes (importbench: about 100 with debug off, 124-143 with
+      // debug on); at Spark's default bound of 100 every task missed the
+      // cache and compiled most of them again. 1000 leaves room for
+      // multi-task deltas, the failure path and recovery plans.
+      // ImportPipelineSpec pins that a repeated import compiles nothing.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 }

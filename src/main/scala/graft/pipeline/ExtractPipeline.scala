@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.html.RdfaExtractor
 import graft.rdf.{NTriples, Quad, Repair, Term, Vocab}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's main ETL pipeline (lib/pipeline-import.js:28-117),
@@ -101,11 +101,19 @@ object ExtractPipeline {
         Repair.fixQuad(quad)).otherwise(quad))
   }
 
-  /** G4: serialized N-Triples line for the sink — the corrected partition
-    * serializes its repaired form (lib/pipeline-import.js:232-238). */
-  def withTtlLine(taggedQuads: DataFrame): DataFrame =
-    taggedQuads.withColumn("ttl", NTriples.toNTriple(
+  /** G4: serialized N-Triples lines for the sinks. `ttl` is the line the
+    * valid partition holds — the corrected partition serializes its
+    * repaired form (lib/pipeline-import.js:232-238). With `original`, also
+    * `original`: the extracted (unrepaired) form the debug partitions
+    * hold, serialized here once rather than once per debug write. */
+  def withTtlLine(taggedQuads: DataFrame, original: Boolean = false): DataFrame = {
+    val lined = taggedQuads.withColumn("ttl", NTriples.toNTriple(
       col("fixed.subject"), col("fixed.predicate"), col("fixed.obj")))
+    if (original) lined.withColumn("original", originalLine) else lined
+  }
+
+  private def originalLine =
+    NTriples.toNTriple(col("subject"), col("predicate"), col("obj"))
 
   /** Full pipeline: pages(url, html) → tagged quads with ttl lines. */
   def run(spark: SparkSession, pages: DataFrame): DataFrame = {
@@ -127,33 +135,42 @@ object ExtractPipeline {
     *   - corrected (debug): the ORIGINAL (unfixed) form of each repaired
     *     triple (`correctedTriples.push(triple)`, :237) — the repaired
     *     form lives in the valid file, not here.
+    *
+    * `lines` carries `verdict` and `ttl` ([[withTtlLine]]'s output, or
+    * [[run]]'s); the debug partitions take its `original` column, which
+    * is serialized here when absent.
     */
-  def writeTtl(taggedQuads: DataFrame, outDir: String,
+  def writeTtl(lines: DataFrame, outDir: String,
       writeDebug: Boolean = false): Unit = {
-    val withLines = withTtlLine(taggedQuads)
-    val originalLine = NTriples.toNTriple(
-      col("subject"), col("predicate"), col("obj")).as("ttl")
-    withLines.filter(col("verdict") === "valid" || col("verdict") === "corrected")
-      .select(col("ttl")).write.mode("overwrite").text(s"$outDir/valid")
-    if (writeDebug) {
-      // `-original.ttl`: the full extracted serialization, pre-validation
-      // (lib/pipeline-import.js:85-91 writes the raw `ttl` array)
-      withLines.select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/original")
-      withLines.filter(col("verdict").isin("invalid", "corrected"))
-        .select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/invalid")
-      withLines.filter(col("verdict") === "corrected")
-        .select(originalLine)
-        .write.mode("overwrite").text(s"$outDir/corrected")
-    }
+    val withOriginal =
+      if (!writeDebug || lines.columns.contains("original")) lines
+      else lines.withColumn("original", originalLine)
+    for ((part, line, keep) <- ttlParts(writeDebug))
+      withOriginal.filter(keep).select(col(line))
+        .write.mode("overwrite").text(s"$outDir/$part")
   }
+
+  /** The TTL partitions [[writeTtl]] writes, as (name, line column, rows
+    * kept): `valid` always, the debug partitions (`-original.ttl` is the
+    * full extracted serialization, pre-validation, lib/pipeline-import.js
+    * :85-91) only with `writeDebug`. */
+  private[pipeline] def ttlParts(writeDebug: Boolean): Seq[(String, String, Column)] =
+    ("valid", "ttl", col("verdict").isin("valid", "corrected")) +: (
+      if (!writeDebug) Nil
+      else Seq(
+        ("original", "original", lit(true)),
+        ("invalid", "original", col("verdict").isin("invalid", "corrected")),
+        ("corrected", "original", col("verdict") === "corrected")))
 
   /** K1-for-HTML (lib/file-helpers.js:88-101 via rdfa-extractor.js:31-38):
     * write each externalized decision body as its own `<md5>.html` file.
     * One file per row by contract (the reference writes one content.html
     * per extracted object), so this is a `foreachPartition` writer — the
-    * only imperative sink in the pipeline, and per-partition parallel. */
+    * only imperative sink in the pipeline. The rows are hash-partitioned
+    * by `file_uri` over the session's default parallelism: AQE coalesces
+    * the small `distinct` upstream to one partition, which put every
+    * file create on one task, while a keyed partitioning spreads them
+    * over the cores and still gives each file name exactly one writer. */
   def writeHtmlFiles(htmlFiles: DataFrame, outDir: String): Unit = {
     // Hadoop FileSystem, resolved inside the partition: executors write to
     // the SHARED sink (file:/hdfs:/s3a: by scheme), not executor-local
@@ -168,6 +185,8 @@ object ExtractPipeline {
       buf.result()
     }
     htmlFiles.select(col("file_uri"), col("content"))
+      .repartition(htmlFiles.sparkSession.sparkContext.defaultParallelism,
+        col("file_uri"))
       .foreachPartition { rows: java.util.Iterator[org.apache.spark.sql.Row] =>
         val conf = new org.apache.hadoop.conf.Configuration(false)
         confEntries.foreach { case (k, v) => conf.set(k, v) }

@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.sources.PageSource
 import graft.rdf.Vocab
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The end-to-end task orchestrator — the reference's `run(deltaEntry)`
@@ -69,12 +69,20 @@ object ImportPipeline {
     }.toDF("task", "graph", "file_name", "size", "derived_from")
   }
 
-  /** Serialized size per page: Σ per line (UTF-8 bytes + newline) —
-    * what `stat(path).size` of the written text file reports. */
-  private def sizesByPage(lines: DataFrame): Map[String, Long] =
-    lines.groupBy(col("url"))
-      .agg(sum(octet_length(col("line")) + lit(1)).as("size"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+  /** Serialized size per partition and page: Σ per line (UTF-8 bytes +
+    * newline) — what `stat(path).size` of the written text file reports.
+    * Every partition in one aggregate, one conditional sum each; keyed
+    * partition → page → bytes. */
+  private def sizesByPage(lines: DataFrame,
+      parts: Seq[(String, String, Column)]): Map[String, Map[String, Long]] = {
+    val sums = parts.map { case (part, line, keep) =>
+      sum(when(keep, octet_length(col(line)) + lit(1)).otherwise(lit(0L))).as(part)
+    }
+    val rows = lines.groupBy(col("url")).agg(sums.head, sums.tail: _*).collect()
+    parts.map { case (part, _, _) =>
+      part -> rows.map(r => r.getString(0) -> r.getAs[Long](part)).toMap
+    }.toMap
+  }
 
   /** Run the import pipeline for one scheduled task (lib/pipeline-import
     * .js:28-117). `quads` is the current metadata store; `pagesDir` holds
@@ -109,46 +117,33 @@ object ImportPipeline {
       val pageHtml = PageSource.readPages(spark, pagesDir)
         .join(broadcast(pageSet), Seq("url"), "left_semi")
 
-      // G1-G4 + P4/D5: extract, externalize, provenance, verdict-tag
+      // G1-G4 + P4/D5: extract, externalize, provenance, verdict-tag,
+      // serialize; only what the sinks read is persisted
       val raw = ExtractPipeline.extractQuads(spark, pageHtml)
       val (externalized, htmlFiles) = ExtractPipeline.externalizeHtml(raw)
-      val tagged = ExtractPipeline.withTtlLine(
-        ExtractPipeline.tagged(ExtractPipeline.withProvenance(externalized)))
+      val lineCols = Seq("url", "verdict", "ttl") ++
+        (if (writeDebug) Seq("original") else Nil)
+      val lines = ExtractPipeline.withTtlLine(
+          ExtractPipeline.tagged(ExtractPipeline.withProvenance(externalized)),
+          original = writeDebug)
+        .select(lineCols.map(col): _*)
         .persist()
       try {
         // K1/K9 sinks
-        ExtractPipeline.writeTtl(tagged, s"$outDir/ttl", writeDebug)
+        ExtractPipeline.writeTtl(lines, s"$outDir/ttl", writeDebug)
         ExtractPipeline.writeHtmlFiles(htmlFiles, s"$outDir/html")
 
         // K2-K4 registration: valid files into all three containers,
         // debug files into the file container only
         // (lib/pipeline-import.js:75-106)
-        val originalLine = graft.rdf.NTriples.toNTriple(
-          col("subject"), col("predicate"), col("obj")).as("line")
-        val validManifest = manifest(spark, pages, sizesByPage(
-          tagged.filter(col("verdict").isin("valid", "corrected"))
-            .select(col("url"), col("ttl").as("line"))),
-          "valid", taskUri, graph)
-        var minted = FileRegistry.fileMetadataQuads(validManifest, nowIso)
-          .unionByName(FileRegistry.containerQuads(validManifest))
-        if (writeDebug) {
-          val debugManifests = Seq(
-            manifest(spark, pages, sizesByPage(
-              tagged.select(col("url"), originalLine)),
-              "original", taskUri, graph),
-            manifest(spark, pages, sizesByPage(
-              tagged.filter(col("verdict").isin("invalid", "corrected"))
-                .select(col("url"), originalLine)),
-              "invalid", taskUri, graph),
-            manifest(spark, pages, sizesByPage(
-              tagged.filter(col("verdict") === "corrected")
-                .select(col("url"), originalLine)),
-              "corrected", taskUri, graph))
-          for (m <- debugManifests)
-            minted = minted
-              .unionByName(FileRegistry.fileMetadataQuads(m, nowIso))
-              .unionByName(FileRegistry.debugContainerQuads(m))
-        }
+        val parts = ExtractPipeline.ttlParts(writeDebug)
+        val sizes = sizesByPage(lines, parts)
+        val minted = parts.map { case (part, _, _) =>
+          val m = manifest(spark, pages, sizes(part), part, taskUri, graph)
+          FileRegistry.fileMetadataQuads(m, nowIso).unionByName(
+            if (part == "valid") FileRegistry.containerQuads(m)
+            else FileRegistry.debugContainerQuads(m))
+        }.reduce(_ unionByName _)
         // INSERT DATA into a triplestore has set semantics: the container
         // entity re-asserted per append collapses (distinct), and quads
         // already present in the store — a replayed batch, a re-scheduled
@@ -162,7 +157,7 @@ object ImportPipeline {
         val done = TaskStore.transitionStatus(registered, taskUri,
           Vocab.statusSuccess, nowIso, Some(graph))
         ImportResult(done, "success", pages.size.toLong, None)
-      } finally tagged.unpersist()
+      } finally lines.unpersist()
     } catch {
       case scala.util.control.NonFatal(e) =>
         // T5 (lib/pipeline-import.js:110-116): error record + failed

@@ -120,6 +120,37 @@ class ExtractPipelineSpec extends SparkSpec {
     assert(content == "<p>full body</p>")
   }
 
+  test("html file sink spreads the writes over tasks, one file per body") {
+    // the upstream distinct is small, so AQE coalesces it to one partition;
+    // the sink must still write on more than one task
+    def bodyPage(body: String) =
+      page.replace("<p>full body</p>", s"<p>$body</p>")
+    val bodies = (1 to 12).map(i => s"body $i")
+    // the first body is on two pages (two rows) and yields one file
+    val pages = (bodies.zipWithIndex.map { case (b, i) =>
+      (s"https://example.org/zitting/$i", bodyPage(b)) } :+
+      ("https://example.org/zitting/again", bodyPage(bodies.head))).toDF("url", "html")
+    val (_, files) = ExtractPipeline.externalizeHtml(ExtractPipeline.extractQuads(spark, pages))
+    val outDir = java.nio.file.Files.createTempDirectory("html-sink").toString
+    val tasksWithRows = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskType == "ResultTask" && e.taskMetrics != null &&
+            e.taskMetrics.shuffleReadMetrics.recordsRead > 0)
+          tasksWithRows.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      ExtractPipeline.writeHtmlFiles(files, outDir)
+      org.apache.spark.graftspec.ListenerBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(tasksWithRows.get > 1, s"${tasksWithRows.get} task(s) wrote files")
+    val written = new java.io.File(outDir).listFiles().toSeq
+      .filterNot(_.getName.startsWith(".")).map(f =>
+        f.getName -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).toMap
+    assert(written == bodies.map(b => s"${md5hex(s"<p>$b</p>")}.html" -> s"<p>$b</p>").toMap)
+  }
+
   test("binding projection coerces integer/dateTime columns (P2, utils.js:7-25)") {
     val bindings = Seq(("42", "2023-05-04T10:11:12", "keep"))
       .toDF("count", "modified", "label")

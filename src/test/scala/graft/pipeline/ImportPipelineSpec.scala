@@ -86,6 +86,13 @@ class ImportPipelineSpec extends SparkSpec {
     assert(sizes("page-1-invalid.ttl") == 0) // all-valid page
     assert(sizes("page-2-invalid.ttl") > 0)  // repairable date, original form
     assert(sizes("page-2-invalid.ttl") == sizes("page-2-corrected.ttl"))
+    // every partition: its registered sizes add up to the bytes written
+    for (part <- Seq("valid", "original", "invalid", "corrected")) {
+      val written = new java.io.File(s"$outDir/ttl/$part").listFiles()
+        .filter(_.getName.startsWith("part-")).map(_.length).sum
+      val registered = sizes.collect { case (f, n) if f.endsWith(s"-$part.ttl") => n }.sum
+      assert(registered == written, s"$part: registered $registered, written $written")
+    }
 
     // containers: valid files in file container AND import graph;
     // debug files in the file container only
@@ -120,6 +127,29 @@ class ImportPipelineSpec extends SparkSpec {
     // present → the left-anti guard appends nothing
     assert(second.quads.count() == n1)
     state1.unpersist()
+  }
+
+  test("a repeated import compiles no new code: the codegen cache holds its working set") {
+    // One debug import generates more distinct classes (108 on this
+    // fixture, up to 143 on the benchmark's debug workload) than Spark's
+    // default JVM-wide cache of 100 holds; graft.Sessions raises the bound
+    // so every task after the first reuses the compiled classes. Also
+    // fails if the generated code varies per run (e.g. an inlined
+    // per-task literal).
+    val pagesDir = writePages()
+    def importOnce(): Unit = {
+      val out = Files.createTempDirectory("import-out").toString
+      val result = ImportPipeline.runImportPipeline(spark, taskQuads, T,
+        pagesDir, out, Now, writeDebug = true)
+      assert(result.status == "success", result)
+      result.quads.collect()
+    }
+    val compilations = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    importOnce()
+    val before = compilations.getCount
+    importOnce()
+    val compiled = compilations.getCount - before
+    assert(compiled == 0, s"the second import compiled $compiled classes")
   }
 
   test("failure lifecycle: error record + failed status (T5)") {
